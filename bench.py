@@ -275,7 +275,7 @@ def main() -> None:
 
         # read throughput, same table: our decoder (stripe/column thread
         # pool) vs pyarrow's parallel C++ parquet reader
-        from hive_dwrf_spark.format.reader import DwrfFile
+        from hive_dwrf_spark.format.reader import STRIDE_CACHE, DwrfFile
 
         with DwrfFile(out) as f:  # warm page cache
             f.read()
@@ -343,7 +343,9 @@ def main() -> None:
         # COLD point-lookup latency: a fresh handle, one pass over 20
         # spread rows — footer parse amortized, every stride decode paid.
         # This is the floor the stride-array LRU cannot help; the warm
-        # metrics below are the serving steady state it does.
+        # metrics below are the serving steady state it does. The LRU is
+        # process-wide, so empty it first.
+        STRIDE_CACHE.clear()
         with DwrfFile(out) as f:
             n_rows = f.num_rows
             targets = list(range(0, n_rows, max(1, n_rows // 20)))[:20]
@@ -355,7 +357,7 @@ def main() -> None:
             )
 
         # point-lookup latency (ROW_INDEX stride seek, reused decoder +
-        # handle-level stride-array LRU): ms per read_row over 20 spread
+        # process-wide stride-array LRU): ms per read_row over 20 spread
         # rows, min-of-5 passes, all on ONE open handle warmed by one
         # full pass — the serving steady state (repeat reads of a hot
         # working set; a fresh handle per pass would re-pay footer parse

@@ -18,7 +18,9 @@ both halves in one pass:
                  matching rows' projected columns are gathered — via the
                  same LRU point-decoder cache DwrfFile.read_row uses, so
                  footer / stripe-footer / index parses amortize across
-                 the whole batch.
+                 the whole batch, and through the process-wide decoded-
+                 stride cache (reader.STRIDE_CACHE), so a later call that
+                 touches the same strides decodes none of them again.
 
 On a range-sorted 100 TB table a k-key batch therefore touches
 O(files-holding-keys) footers + O(strides-holding-keys) stride decodes,
@@ -76,7 +78,9 @@ def lookup_keys(
     returns none). `columns` projects the output (the key column is
     decoded for matching regardless and appears in the output only if
     projected). Pass a dict as `trace` to observe the pruning decisions
-    ({files_total, files_pruned, strides_total, strides_scanned}).
+    ({files_total, files_pruned, strides_total, strides_scanned}) and the
+    decoded-stride cache outcomes ({stride_cache_hits,
+    stride_cache_misses}).
     """
     # NULL keys match no row (SQL equality semantics) — drop them before
     # sorting, where None is unorderable; mixed int/string keys likewise
@@ -100,10 +104,13 @@ def lookup_keys(
             strides_total=0,
             strides_scanned=0,
         )
+    # every handle of this call counts its stride cache outcomes here
+    tally = {"hits": 0, "misses": 0}
     out_chunks: dict[str, list[pa.Array]] = {}
     schema: pa.Schema | None = None
     for fp in files:
         with DwrfFile(fp) as f:
+            f.stride_cache_tally = tally
             key_tid = f._top_level_id(key_column)
             if key_tid is None:
                 raise KeyError(f"{key_column!r} not in {fp}")
@@ -151,7 +158,7 @@ def lookup_keys(
                     def whole(tid):
                         col = stripe_cols.get(tid)
                         if col is None:
-                            col = dec.decode_column(tid, n_rows)
+                            col = f._cached_whole_column(dec, i, tid, n_rows)
                             stripe_cols[tid] = col
                         return col
 
@@ -175,8 +182,8 @@ def lookup_keys(
                                 if in_stride:
                                     s_idx0 = int(offs_global[0]) // stride
                                     try:
-                                        arr = dec.decode_stride_column(
-                                            tid, s_idx0, stride, n_rows
+                                        arr = f._cached_stride_column(
+                                            dec, i, tid, s_idx0, stride, n_rows
                                         )
                                         piece = arr.take(
                                             pa.array(
@@ -222,8 +229,8 @@ def lookup_keys(
                             trace["strides_scanned"] += 1
                         base = s_idx * stride
                         try:
-                            karr = dec.decode_stride_column(
-                                key_tid, s_idx, stride, n_rows
+                            karr = f._cached_stride_column(
+                                dec, i, key_tid, s_idx, stride, n_rows
                             )
                         except NoStridePositions:
                             karr, base = whole(key_tid), 0
@@ -236,6 +243,10 @@ def lookup_keys(
                         hits = _match_offsets(karr, key_set)
                         if len(hits):
                             emit(hits + base, karr, base, in_stride=True)
+    if trace is not None:
+        trace.update(
+            stride_cache_hits=tally["hits"], stride_cache_misses=tally["misses"]
+        )
     if schema is None:  # no files had rows and none set a schema
         with DwrfFile(files[0]) as f:
             schema = (

@@ -14,6 +14,10 @@ evaluation to the consumer — SURVEY.md §4 O2)."""
 from __future__ import annotations
 
 import os
+import threading
+import warnings
+import zlib
+from collections import OrderedDict
 
 import numpy as np
 import pyarrow as pa
@@ -30,7 +34,7 @@ from .constants import (
 )
 from .stats import ColumnStats, stats_from_proto
 from .types import arrow_type_of as _arrow_type_of
-from .types import type_tree_to_schema
+from .types import subtree_ids, type_tree_to_schema
 
 
 #: trailing-zero multiplier LUT for packed nanos: tag 0 -> x1 (no packing),
@@ -970,6 +974,93 @@ def _resolve_field(name: str, names: list[str]) -> str | None:
     return None
 
 
+_STRIDE_CACHE_MB_DEFAULT = 64
+
+
+def _stride_cache_budget() -> int:
+    """SPARK_GRAFT_STRIDE_CACHE_MB in bytes. A value that is not a
+    non-negative integer falls back to the default with a warning instead
+    of failing every DwrfFile open."""
+    raw = os.environ.get(
+        "SPARK_GRAFT_STRIDE_CACHE_MB", str(_STRIDE_CACHE_MB_DEFAULT)
+    )
+    try:
+        mb = int(raw)
+    except ValueError:
+        mb = -1
+    if mb < 0:
+        warnings.warn(
+            f"SPARK_GRAFT_STRIDE_CACHE_MB={raw!r} is not a non-negative "
+            f"integer; using {_STRIDE_CACHE_MB_DEFAULT}",
+            RuntimeWarning,
+        )
+        mb = _STRIDE_CACHE_MB_DEFAULT
+    return mb << 20
+
+
+class StrideCache:
+    """Process-wide, byte-budgeted LRU of decoded stride arrays, shared by
+    every DwrfFile handle.
+
+    The serving steady state re-reads a hot working set: concurrent
+    clients on one handle used to re-decode the same strides (the
+    r8-measured 9.8 ms/lookup at 32 clients vs 1.8 ms/row batched), and
+    lookup_keys opens fresh handles per call, so a per-handle cache was
+    dropped at every close. Keys start with a file identity (path,
+    fs.stat_key, footer digest; DwrfFile._cache_identity), so a handle
+    opened on an unchanged file finds the arrays an earlier handle
+    decoded, and a file replaced at the same path misses. The budget
+    (SPARK_GRAFT_STRIDE_CACHE_MB, default 64) bounds the whole process;
+    the lock guards only bookkeeping, never a decode."""
+
+    def __init__(self):
+        self.budget = _stride_cache_budget()
+        self._arrays: OrderedDict = OrderedDict()
+        self._bytes = 0
+        self._lock = threading.Lock()
+
+    @property
+    def nbytes(self) -> int:
+        return self._bytes
+
+    def __len__(self) -> int:
+        return len(self._arrays)
+
+    def clear(self) -> None:
+        with self._lock:
+            self._arrays.clear()
+            self._bytes = 0
+
+    def fetch(self, key, decode, tally: dict) -> pa.Array:
+        """The cached array for `key`, else `decode()`'s result, cached.
+        Counts hits and completed decodes into `tally` ({"hits",
+        "misses"}) under the lock. Exceptions from `decode` propagate,
+        and count and cache nothing."""
+        with self._lock:
+            arr = self._arrays.get(key)
+            if arr is not None:
+                self._arrays.move_to_end(key)
+                tally["hits"] += 1
+                return arr
+        arr = decode()
+        nbytes = arr.nbytes
+        with self._lock:
+            tally["misses"] += 1
+            # a single oversized array would evict everything
+            if nbytes > self.budget or key in self._arrays:
+                return arr
+            self._arrays[key] = arr
+            self._bytes += nbytes
+            while self._bytes > self.budget:
+                _, old = self._arrays.popitem(last=False)
+                self._bytes -= old.nbytes
+        return arr
+
+
+#: the one decoded-stride cache of this process
+STRIDE_CACHE = StrideCache()
+
+
 class DwrfFile:
     """Random-access DWRF file reader."""
 
@@ -991,23 +1082,11 @@ class DwrfFile:
         # point-lookup decoder reuse (read_row): (stripe, projection) ->
         # no-prefetch _StripeDecoder with warmed dictionary/index caches
         self._point_decoders: dict = {}
-        # decoded-stride-array LRU shared by all point lookups on this
-        # handle: (stripe, type_id, s_idx) -> pa.Array. The serving
-        # steady state re-reads a hot working set, and under concurrent
-        # clients EVERY thread used to re-decode the same stride (the
-        # r8-measured 9.8 ms/lookup at 32 clients vs 1.8 ms/row batched);
-        # with the arrays cached a repeat hit is a dict move + .take.
-        # Byte-budgeted (SPARK_GRAFT_STRIDE_CACHE_MB, default 64) so a
-        # wide scan through cold strides can't pin the heap; the lock
-        # guards only cache bookkeeping, never a decode.
-        import threading as _threading
-
-        self._stride_arrays: dict = {}
-        self._stride_bytes = 0
-        self._stride_budget = (
-            int(os.environ.get("SPARK_GRAFT_STRIDE_CACHE_MB", 64)) << 20
-        )
-        self._stride_lock = _threading.Lock()
+        # decoded-stride arrays live in the process-wide STRIDE_CACHE;
+        # this handle's key prefix is computed on first use (see
+        # _cache_identity) and its hit/miss counts are kept here
+        self._identity: tuple | None = None
+        self.stride_cache_tally = {"hits": 0, "misses": 0}
         try:
             # local files: positional os.pread, safe under the stripe pool
             self._fileno = self._f.fileno()
@@ -1047,6 +1126,9 @@ class DwrfFile:
                     self.file_length - (flen + ps_len + 1), flen + ps_len + 1
                 )
             footer_raw = bytes(tail[-1 - ps_len - flen : -1 - ps_len])
+            # footer + postscript digest: tells apart two same-size files
+            # written within one mtime tick at the same path
+            self._tail_crc = zlib.crc32(tail[-1 - ps_len - flen :])
             self.footer = proto.decode_message(
                 proto.Footer,
                 memoryview(
@@ -1702,53 +1784,53 @@ class DwrfFile:
         self._point_decoders[key] = dec
         return dec
 
-    def _stride_cache_get(self, key):
-        with self._stride_lock:
-            arr = self._stride_arrays.pop(key, None)
-            if arr is not None:  # LRU touch: reinsert at the back
-                self._stride_arrays[key] = arr
-            return arr
+    def _cache_identity(self) -> tuple:
+        """This file's STRIDE_CACHE key prefix: (path, fs.stat_key, footer
+        digest) — the identity the scan plan cache trusts, plus the digest
+        for a same-size rewrite inside one mtime tick. Computed on first
+        use, so scans that never touch the cache pay no stat."""
+        if self._identity is None:
+            from .fs import get_fs
 
-    def _stride_cache_put(self, key, arr) -> None:
-        nbytes = arr.nbytes
-        if nbytes > self._stride_budget:
-            return  # a single oversized array would evict everything
-        with self._stride_lock:
-            if key in self._stride_arrays:  # concurrent decoder won
-                return
-            self._stride_arrays[key] = arr
-            self._stride_bytes += nbytes
-            # evict from the FRONT (dict preserves insertion order; a hit
-            # reinserts at the back, so the front is least-recent)
-            while self._stride_bytes > self._stride_budget and self._stride_arrays:
-                old = self._stride_arrays.pop(next(iter(self._stride_arrays)))
-                self._stride_bytes -= old.nbytes
+            self._identity = (
+                self.path,
+                get_fs(self.path).stat_key(self.path),
+                self._tail_crc,
+            )
+        return self._identity
 
     def _cached_stride_column(
         self, dec, stripe_index: int, tid: int, s_idx: int, stride: int,
         n_rows: int,
     ) -> pa.Array:
-        """decode_stride_column through the handle-level array LRU —
-        repeat lookups into a hot stride skip the decode entirely.
+        """decode_stride_column through the process-wide STRIDE_CACHE —
+        repeat lookups into a hot stride skip the decode entirely, also
+        from a fresh handle on the same file. A stride decode always
+        yields the column's whole subtree, so the key needs no projection.
         Propagates NoStridePositions (never cached)."""
-        key = (stripe_index, tid, s_idx)
-        arr = self._stride_cache_get(key)
-        if arr is None:
-            arr = dec.decode_stride_column(tid, s_idx, stride, n_rows)
-            self._stride_cache_put(key, arr)
-        return arr
+        return STRIDE_CACHE.fetch(
+            (self._cache_identity(), stripe_index, tid, s_idx),
+            lambda: dec.decode_stride_column(tid, s_idx, stride, n_rows),
+            self.stride_cache_tally,
+        )
 
     def _cached_whole_column(
         self, dec, stripe_index: int, tid: int, n_rows: int
     ) -> pa.Array:
         """Whole-stripe fallback (NoStridePositions columns) through the
-        same LRU, keyed with s_idx=-1."""
-        key = (stripe_index, tid, -1)
-        arr = self._stride_cache_get(key)
-        if arr is None:
-            arr = dec.decode_column(tid, n_rows)
-            self._stride_cache_put(key, arr)
-        return arr
+        same cache, keyed with s_idx=-1 plus the decoder's projection
+        inside the column's subtree: a whole-column struct decode emits
+        only the projected children."""
+        proj = None
+        if dec.decode_ids is not None:
+            sub = subtree_ids(self.types, tid)
+            if not dec.decode_ids.issuperset(sub):
+                proj = tuple(s for s in sub if s in dec.decode_ids)
+        return STRIDE_CACHE.fetch(
+            (self._cache_identity(), stripe_index, tid, -1, proj),
+            lambda: dec.decode_column(tid, n_rows),
+            self.stride_cache_tally,
+        )
 
     def read_row(
         self, row_number: int, columns: list[str] | None = None
@@ -1821,9 +1903,11 @@ class DwrfFile:
         k lookups landing in the same stride cost one stride decode plus
         O(k) gathers, where the read_row loop pays k stride decodes.
         Footer / stripe-footer / ROW_INDEX parses are amortized across
-        the batch through the shared LRU point-decoder cache, and columns
-        without seek positions (UNION, legacy files) fall back to ONE
-        whole-stripe decode per (stripe, column) for the entire batch."""
+        the batch through the handle's LRU point-decoder cache, decoded
+        strides are shared with every other handle on the same file
+        through the process-wide STRIDE_CACHE, and columns without seek
+        positions (UNION, legacy files) fall back to ONE whole-stripe
+        decode per (stripe, column) for the entire batch."""
         import bisect
 
         ids = [int(r) for r in row_numbers]

@@ -58,6 +58,19 @@ def test_lookup_prunes_files(table_dir, capsys):
     assert "files 1/2 pruned" in capsys.readouterr().err
 
 
+def test_lookup_reports_stride_cache(table_dir, capsys):
+    # the decoded-stride cache is process-wide: a repeated lookup decodes
+    # nothing and reports every stride as a hit
+    from hive_dwrf_spark.format.reader import STRIDE_CACHE
+
+    STRIDE_CACHE.clear()
+    assert main(["lookup", table_dir, "k", "5,150"]) == 0
+    first = capsys.readouterr().err
+    assert "stride cache 0 hits" in first and ", 0 misses" not in first
+    assert main(["lookup", table_dir, "k", "5,150"]) == 0
+    assert ", 0 misses" in capsys.readouterr().err
+
+
 def test_compact(table_dir, tmp_path, capsys):
     from hive_dwrf_spark.format.reader import DwrfFile
 

@@ -8,13 +8,22 @@ statistics, ReaderImpl.java:204-260)."""
 from __future__ import annotations
 
 import os
+import sys
+import threading
 
 import numpy as np
 import pyarrow as pa
 import pytest
 
 from hive_dwrf_spark.format import DwrfFile, write_arrow_table
+from hive_dwrf_spark.format import reader as reader_mod
 from hive_dwrf_spark.format.lookup import lookup_keys
+
+
+@pytest.fixture(autouse=True)
+def _empty_stride_cache():
+    """The decoded-stride cache is process-wide: start each test empty."""
+    reader_mod.STRIDE_CACHE.clear()
 
 
 def _nested_table(n: int) -> pa.Table:
@@ -171,29 +180,75 @@ class TestReadRowsAt:
             assert list(f._point_decoders)[-1] == hot  # touched to back
 
     def test_stride_array_cache_hits_and_budget(self, nested_file, monkeypatch):
-        """The handle-level decoded-stride LRU (the r8 concurrent-serving
-        fix): a repeat read_row of the same stride decodes nothing new,
-        values stay exact, and the byte budget evicts instead of
-        growing without bound."""
+        """The process-wide decoded-stride LRU (the r8 concurrent-serving
+        fix, now shared by every handle): a repeat read_row of the same
+        stride decodes nothing new, also on a second handle, values stay
+        exact, and the byte budget evicts instead of growing without
+        bound."""
+        cache = reader_mod.STRIDE_CACHE
         with DwrfFile(nested_file) as f:
             first = f.read_row(1_234)
-            n_entries = len(f._stride_arrays)
-            assert n_entries > 0 and f._stride_bytes > 0
+            n_entries = len(cache)
+            assert n_entries > 0 and cache.nbytes > 0
+            assert f.stride_cache_tally == {"hits": 0, "misses": n_entries}
+        with DwrfFile(nested_file) as g:
             # repeat hit: same keys, same values, no new entries
-            again = f.read_row(1_234)
-            assert again == first
-            assert len(f._stride_arrays) == n_entries
+            assert g.read_row(1_234) == first
+            assert len(cache) == n_entries
             # neighbor row in the same stride: pure cache hit too
-            f.read_row(1_235)
-            assert len(f._stride_arrays) == n_entries
+            g.read_row(1_235)
+            assert len(cache) == n_entries
+            assert g.stride_cache_tally == {"hits": 2 * n_entries, "misses": 0}
         # a 1-MB budget must bound the cache while answers stay exact
         monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", "1")
-        with DwrfFile(nested_file) as f:
-            rows = {}
-            for r in (0, 8_000, 16_000, 24_000, 1_234):
+        small = reader_mod.StrideCache()
+        monkeypatch.setattr(reader_mod, "STRIDE_CACHE", small)
+        rows = {}
+        for r in (0, 8_000, 16_000, 24_000, 1_234):
+            with DwrfFile(nested_file) as f:
                 rows[r] = f.read_row(r)
-            assert f._stride_bytes <= 1 << 20
-            assert rows[1_234] == first
+        assert small.budget == 1 << 20
+        assert 0 < small.nbytes <= 1 << 20
+        assert rows[1_234] == first
+
+    def test_stride_cache_budget_env_parse(self, monkeypatch):
+        """A malformed or negative SPARK_GRAFT_STRIDE_CACHE_MB falls back
+        to 64 MiB with one warning instead of failing every open."""
+        import warnings
+
+        for raw, mb, warned in (
+            ("16", 16, False),
+            ("0", 0, False),
+            ("abc", 64, True),
+            ("-3", 64, True),
+            ("1.5", 64, True),
+        ):
+            monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", raw)
+            with warnings.catch_warnings(record=True) as w:
+                warnings.simplefilter("always")
+                assert reader_mod.StrideCache().budget == mb << 20, raw
+            assert len(w) == int(warned), (raw, [str(x.message) for x in w])
+        monkeypatch.delenv("SPARK_GRAFT_STRIDE_CACHE_MB")
+        assert reader_mod.StrideCache().budget == 64 << 20
+
+    def test_whole_column_cache_keys_nested_projection(self, tmp_path):
+        """Without a row index a struct decodes whole-stripe, emitting only
+        the projected children: the cache key must carry that projection,
+        or a later full read gets the pruned struct."""
+        path = str(tmp_path / "legacy.dwrf")
+        write_arrow_table(
+            path, _nested_table(5_000), row_index_stride=0, stripe_rows=2_000
+        )
+        with DwrfFile(path) as f:
+            a_only = f.read_rows_at([3, 7], columns=["st.a"])
+            assert a_only.column("st").to_pylist() == [{"a": 3}, {"a": 2}]
+            full = f.read_rows_at([3, 7], columns=["st"])
+            assert full.column("st").to_pylist() == [
+                {"a": 3, "b": "x0"},
+                {"a": 2, "b": "x1"},
+            ]
+        with DwrfFile(path) as g:  # and across handles
+            assert g.read_rows_at([3, 7], columns=["st.a"]).equals(a_only)
 
     def test_concurrent_lookups_shared_handle_exact(self, nested_file):
         """32 threads on ONE handle: every thread sees exact values while
@@ -340,3 +395,116 @@ class TestLookupKeys:
         # bare TypeError from sorted()
         with pytest.raises(ValueError, match="orderable type"):
             lookup_keys(serving_dir, "k", [1, "one"])
+
+    def test_repeat_call_decodes_nothing(self, serving_dir, monkeypatch):
+        """A second call with the same keys opens fresh handles, serves
+        every stride from the process-wide cache and returns the same
+        table."""
+        keys = [150, 20_001, 25_000, 61_000, 79_999]
+        first_trace: dict = {}
+        first = lookup_keys(serving_dir, "k", keys, trace=first_trace)
+        assert first_trace["stride_cache_hits"] == 0
+        assert first_trace["stride_cache_misses"] > 0
+        calls = {"n": 0}
+        for name in ("decode_stride_column", "decode_column"):
+            orig = getattr(reader_mod._StripeDecoder, name)
+
+            def counting(self, *a, _orig=orig, **kw):
+                calls["n"] += 1
+                return _orig(self, *a, **kw)
+
+            monkeypatch.setattr(reader_mod._StripeDecoder, name, counting)
+        trace: dict = {}
+        again = lookup_keys(serving_dir, "k", keys, trace=trace)
+        assert calls["n"] == 0
+        assert again.equals(first)
+        assert trace["stride_cache_misses"] == 0
+        assert trace["stride_cache_hits"] == (
+            first_trace["stride_cache_hits"] + first_trace["stride_cache_misses"]
+        )
+
+    def test_replaced_file_serves_new_values(self, tmp_path):
+        """A file replaced at the same path by the commit pattern (temp
+        file + os.replace) is a new cache identity, even at the same size
+        and modification time."""
+        d = str(tmp_path / "swap")
+        os.makedirs(d)
+        path = os.path.join(d, "p.dwrf")
+        n = 3_000
+
+        def commit(v: int):
+            t = pa.table(
+                {
+                    "k": pa.array(np.arange(n, dtype=np.int64)),
+                    "v": pa.array(np.full(n, v, dtype=np.int64)),
+                }
+            )
+            tmp = os.path.join(d, ".p.dwrf.tmp")
+            write_arrow_table(tmp, t, stripe_rows=1_000, row_index_stride=500)
+            os.replace(tmp, path)
+
+        commit(4)
+        assert lookup_keys(d, "k", [5, 2_500]).column("v").to_pylist() == [4, 4]
+        commit(1)  # a different size
+        assert lookup_keys(d, "k", [5, 2_500]).column("v").to_pylist() == [1, 1]
+        # same size (4 and 5 encode to equal lengths), mtime forced back:
+        # only the footer digest tells the files apart
+        commit(4)
+        assert lookup_keys(d, "k", [5, 2_500]).column("v").to_pylist() == [4, 4]
+        before = os.stat(path)
+        commit(5)
+        assert os.stat(path).st_size == before.st_size
+        os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
+        assert lookup_keys(d, "k", [5, 2_500]).column("v").to_pylist() == [5, 5]
+
+    def test_budget_holds_across_handles(self, serving_dir, monkeypatch):
+        """The byte budget bounds the whole process, not each handle:
+        lookups over 4 files, each through its own handle, stay within
+        1 MiB and exact."""
+        monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", "1")
+        small = reader_mod.StrideCache()
+        monkeypatch.setattr(reader_mod, "STRIDE_CACHE", small)
+        keys = [k for base in range(0, 80_000, 20_000) for k in (base + 3, base + 17_003)]
+        for _ in range(2):
+            out = lookup_keys(serving_dir, "k", keys)
+            assert sorted(out.column("k").to_pylist()) == keys
+            assert out.column("v").to_pylist() == [
+                f"s{k % 31}" for k in out.column("k").to_pylist()
+            ]
+            assert 0 < small.nbytes <= 1 << 20
+
+    def test_concurrent_fresh_handle_lookups_exact(self, serving_dir):
+        """8 threads of fresh-handle lookup_keys share one cache and every
+        result stays exact (short switch interval to force interleaving)."""
+        n = 20_000
+        errors: list = []
+
+        def client(cid: int):
+            rng = np.random.default_rng(cid)
+            try:
+                for _ in range(5):
+                    keys = sorted(set(rng.integers(0, 4 * n, 6).tolist()))
+                    out = lookup_keys(serving_dir, "k", keys)
+                    got = out.column("k").to_pylist()
+                    assert got == keys, (got, keys)
+                    assert out.column("v").to_pylist() == [
+                        f"s{k % 31}" for k in keys
+                    ]
+                    assert out.column("lst").to_pylist() == [
+                        [(k % n) % 7, (k % n) % 5] for k in keys
+                    ]
+            except Exception as e:  # reported on the main thread
+                errors.append(e)
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            threads = [threading.Thread(target=client, args=(c,)) for c in range(8)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
