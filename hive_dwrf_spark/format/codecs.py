@@ -1006,10 +1006,10 @@ def _compress_pool():
         import os
         from concurrent.futures import ThreadPoolExecutor
 
-        env = os.environ.get("SPARK_GRAFT_COMPRESS_THREADS")
-        workers = (
-            max(1, int(env)) if env else min(4, os.cpu_count() or 2)
-        )
+        from .config import env_int
+
+        default = min(4, os.cpu_count() or 2)
+        workers = max(1, env_int("SPARK_GRAFT_COMPRESS_THREADS", default))
         _COMPRESS_POOL = ThreadPoolExecutor(
             max_workers=workers,
             thread_name_prefix="dwrf-compress",

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import os
 import threading
-import warnings
 import zlib
 from collections import OrderedDict
 
@@ -23,6 +22,7 @@ import numpy as np
 import pyarrow as pa
 
 from . import codecs, proto
+from .config import env_int
 from .profiler import profiler
 from .constants import (
     MAGIC,
@@ -978,23 +978,8 @@ _STRIDE_CACHE_MB_DEFAULT = 64
 
 
 def _stride_cache_budget() -> int:
-    """SPARK_GRAFT_STRIDE_CACHE_MB in bytes. A value that is not a
-    non-negative integer falls back to the default with a warning instead
-    of failing every DwrfFile open."""
-    raw = os.environ.get(
-        "SPARK_GRAFT_STRIDE_CACHE_MB", str(_STRIDE_CACHE_MB_DEFAULT)
-    )
-    try:
-        mb = int(raw)
-    except ValueError:
-        mb = -1
-    if mb < 0:
-        warnings.warn(
-            f"SPARK_GRAFT_STRIDE_CACHE_MB={raw!r} is not a non-negative "
-            f"integer; using {_STRIDE_CACHE_MB_DEFAULT}",
-            RuntimeWarning,
-        )
-        mb = _STRIDE_CACHE_MB_DEFAULT
+    """SPARK_GRAFT_STRIDE_CACHE_MB in bytes (malformed values: env_int)."""
+    mb = env_int("SPARK_GRAFT_STRIDE_CACHE_MB", _STRIDE_CACHE_MB_DEFAULT)
     return mb << 20
 
 

@@ -39,6 +39,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from . import codecs, proto
+from .config import env_int
 from .profiler import profiler
 from .constants import (
     CHECKSUM_METADATA_KEY,
@@ -127,10 +128,8 @@ def _encode_pool():
     if _ENCODE_POOL is None:
         from concurrent.futures import ThreadPoolExecutor
 
-        env = os.environ.get("SPARK_GRAFT_ENCODE_THREADS")
-        workers = (
-            max(1, int(env)) if env else min(8, os.cpu_count() or 4)
-        )
+        default = min(8, os.cpu_count() or 4)
+        workers = max(1, env_int("SPARK_GRAFT_ENCODE_THREADS", default))
         _ENCODE_POOL = ThreadPoolExecutor(
             max_workers=workers,
             thread_name_prefix="dwrf-encode",

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from ..format.config import env_int
+
 # Fixed MinHash parameters: classic 31-bit minhash over the Mersenne prime
 # 2^31-1. Everything — shingle hash, permutations a*h+b — stays strictly
 # below 2^62, so numpy int64 arithmetic is EXACT (no wraparound) and the
@@ -135,12 +137,9 @@ def _resolve_bucket_cap(bucket_cap: int | None) -> int | None:
     """Resolve the per-bucket candidate cap: an explicit argument wins,
     else SPARK_GRAFT_LSH_BUCKET_CAP (0/unset = uncapped). Returns None
     for 'no cap'."""
-    import os
-
     if bucket_cap is not None:
         return bucket_cap if bucket_cap > 0 else None
-    env = int(os.environ.get("SPARK_GRAFT_LSH_BUCKET_CAP", 0))
-    return env if env > 0 else None
+    return env_int("SPARK_GRAFT_LSH_BUCKET_CAP", 0) or None
 
 
 def _pair_explode_sql(list_col: str) -> str:
@@ -603,9 +602,7 @@ def _maybe_broadcast_ids(ids: DataFrame) -> DataFrame:
     corpus-touching join + aggregate, and counting the raw plan would
     re-execute all of it again inside the anti-join (the checkpoint
     itself is id-list-sized, never the corpus)."""
-    import os
-
-    limit = int(os.environ.get("SPARK_GRAFT_BROADCAST_IDS_MAX", 5_000_000))
+    limit = env_int("SPARK_GRAFT_BROADCAST_IDS_MAX", 5_000_000)
     if not limit:
         return ids
     ids = ids.localCheckpoint(eager=True)
@@ -1125,14 +1122,10 @@ def connected_components(
     Nodes only appear if they occur in `pairs` — callers union in
     singletons if every document needs a label.
     """
-    import os
-
     from pyspark import StorageLevel
 
     if local_threshold is None:
-        local_threshold = int(
-            os.environ.get("SPARK_GRAFT_CC_LOCAL_THRESHOLD", 2_000_000)
-        )
+        local_threshold = env_int("SPARK_GRAFT_CC_LOCAL_THRESHOLD", 2_000_000)
     edges = (
         pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b"))
         .union(pairs.select(F.col(id2).alias("a"), F.col(id1).alias("b")))

@@ -8,6 +8,7 @@ comparator sorts columns by name before hashing values.
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,23 +30,9 @@ def query(name: str, oracle: str | None = None):
 
 
 def load_registry():
-    """Import all query modules (side effect: registry population)."""
-    from . import core  # noqa: F401
-
-    try:
-        from . import roundtrip  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from . import pipeline  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from . import extended  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from . import analytics  # noqa: F401
-    except ImportError:
-        pass
+    """Import all query modules (side effect: registry population). A
+    module that fails to import raises rather than leaving its family
+    out of the registry."""
+    for mod in ("core", "roundtrip", "pipeline", "extended", "analytics"):
+        importlib.import_module(f"{__name__}.{mod}")
     return QUERIES, ORACLE

@@ -104,9 +104,12 @@ def _list_dwrf_files(path: str) -> list[str]:
     return out
 
 
-def _accepted_batch_groups(lines: list[str]) -> dict[str, dict[str, str]]:
+def _accepted_batch_groups(
+    lines: list[str], log: str
+) -> dict[str, dict[str, str]]:
     """{batchId: {relpath: rows_field}} of COMPLETE, FIRST-seen commit
-    groups in a ``_batches`` log, in first-seen batch order (dict order).
+    groups in the ``_batches`` log at `log`, in first-seen batch order
+    (dict order).
 
     Marker protocol (round 11): each commit appends ``#begin\\t<batchId>``,
     its ``batchId\\trelpath\\trows`` file lines, then ``#end\\t<batchId>``.
@@ -117,44 +120,35 @@ def _accepted_batch_groups(lines: list[str]) -> dict[str, dict[str, str]]:
       would merge into the retry's group (both precede its ``#end`` and
       share the batchId) and a committedOnly read would double-count.
     Round-10 logs (``#end`` only) parse identically except for that last
-    case; pre-marker logs fall back to contiguous-run detection."""
+    case. A log with file lines but no marker at all (written before
+    round 10, or damaged) raises ValueError: reading it as "nothing
+    committed" would let compact_manifest rewrite it to nothing."""
     accepted: dict[str, dict[str, str]] = {}
-    # any marker (not just #end) selects the marker protocol: a log whose
-    # ONLY commit attempt tore after '#begin' has no '#end' line, and the
-    # legacy fallback would wrongly accept the torn lines as a run
-    if any(ln.startswith(("#end\t", "#begin\t")) for ln in lines):
-        group: dict[str, str] = {}
-        begin_id: str | None = None
-        for ln in lines:
-            parts = ln.split("\t")
-            if parts[0] == "#begin" and len(parts) >= 2:
-                group = {}  # discard any torn lines before this commit
-                begin_id = parts[1]
-            elif parts[0] == "#end" and len(parts) >= 2:
-                # a begin/end batchId mismatch means interleaved torn
-                # groups — neither is a trustworthy commit, drop both
-                if begin_id is None or begin_id == parts[1]:
-                    accepted.setdefault(parts[1], group)
-                group = {}
-                begin_id = None
-            elif len(parts) >= 2 and not parts[0].startswith("#"):
-                group[parts[1]] = parts[2] if len(parts) > 2 else ""
-        return accepted
-    # legacy logs (no markers): contiguous same-batchId runs are
-    # groups; keep the first run per batchId (a retry is only
-    # detectable when another batch interleaves)
-    order: list[str] = []
+    group: dict[str, str] = {}
+    begin_id: str | None = None
+    saw_marker = False
     for ln in lines:
         parts = ln.split("\t")
-        if len(parts) < 2 or parts[0].startswith("#"):
-            continue
-        bid, rel = parts[0], parts[1]
-        rows = parts[2] if len(parts) > 2 else ""
-        if bid not in accepted:
-            accepted[bid] = {rel: rows}
-            order.append(bid)
-        elif bid == order[-1]:
-            accepted[bid][rel] = rows
+        if parts[0] == "#begin" and len(parts) >= 2:
+            saw_marker = True
+            group = {}  # discard any torn lines before this commit
+            begin_id = parts[1]
+        elif parts[0] == "#end" and len(parts) >= 2:
+            saw_marker = True
+            # a begin/end batchId mismatch means interleaved torn
+            # groups — neither is a trustworthy commit, drop both
+            if begin_id is None or begin_id == parts[1]:
+                accepted.setdefault(parts[1], group)
+            group = {}
+            begin_id = None
+        elif len(parts) >= 2 and not parts[0].startswith("#"):
+            group[parts[1]] = parts[2] if len(parts) > 2 else ""
+    if group and not saw_marker:
+        raise ValueError(
+            f"commit log {log} has file lines but no #begin/#end commit "
+            "markers — a log written before round 10, or a damaged one; "
+            "its committed set cannot be trusted. Rebuild or remove it."
+        )
     return accepted
 
 
@@ -183,7 +177,7 @@ def committed_files(path: str) -> set[str] | None:
     if fs.exists(batches):
         with fs.open(batches, "r") as f:
             lines = [ln.rstrip("\n") for ln in f]
-        accepted = _accepted_batch_groups(lines)
+        accepted = _accepted_batch_groups(lines, batches)
         out: set[str] = set()
         for rels in accepted.values():
             out.update(rels)
@@ -206,9 +200,8 @@ def _parse_lineage(
     """{merged_rel: [(src_rel, stripe_lo, stripe_hi, src_mtime_ns)]}
     from a _batches log's ``#src`` lineage lines (compact_sink writes
     one per merged source: the source's verbatim stripe span inside the
-    merged file plus its last mtime). Both commit-group parsers ignore
-    '#'-prefixed lines, so lineage coexists with every historical log
-    shape."""
+    merged file plus its last mtime). The commit-group parser ignores
+    ``#src`` lines, so lineage coexists with the commit groups."""
     out: dict[str, list[tuple[str, int, int, int]]] = {}
     for ln in lines:
         parts = ln.split("\t")
@@ -358,7 +351,7 @@ def compact_manifest(
         return None
     with fs.open(log, "r") as f:
         lines = [ln.rstrip("\n") for ln in f if ln.strip()]
-    accepted = _accepted_batch_groups(lines)
+    accepted = _accepted_batch_groups(lines, log)
     live = {
         rel_subpath(fp, path)
         for fp in fs.list_files(path, (".dwrf", ".orc"))
@@ -473,7 +466,7 @@ def compact_sink(
         )
     with fs.open(log, "r") as f:
         lines = [ln.rstrip("\n") for ln in f if ln.strip()]
-    accepted = _accepted_batch_groups(lines)
+    accepted = _accepted_batch_groups(lines, log)
     # rel -> (size, rows) for committed files still on disk, per directory
     by_dir: dict[str, list[tuple[str, int, str]]] = {}
     rel_rows = {}

@@ -79,8 +79,7 @@ class DwrfLookupUDTF:
         return AnalyzeResult(schema=StructType(fields))
 
     def eval(self, path, key_col, keys):
-        import os
-
+        from ..format.config import env_int
         from ..format.fs import strip_file_uri
         from ..format.lookup import lookup_keys
 
@@ -89,9 +88,7 @@ class DwrfLookupUDTF:
         keys = [k for k in (keys or []) if k is not None]
         if not keys:
             return
-        max_keys = int(
-            os.environ.get("SPARK_GRAFT_LOOKUP_MAX_KEYS", self.MAX_KEYS)
-        )
+        max_keys = env_int("SPARK_GRAFT_LOOKUP_MAX_KEYS", self.MAX_KEYS)
         if len(keys) > max_keys:
             raise ValueError(
                 f"dwrf_lookup: {len(keys)} keys exceeds the serving-path "
@@ -109,9 +106,9 @@ def register_udtfs(spark) -> None:
     """Register the SQL TVFs (idempotent per session)."""
     if getattr(spark, "_dwrf_udtfs_registered", False):
         return
-    import os
-
     from pyspark.sql.functions import udtf
+
+    from ..format.config import env_int
 
     # snapshot the driver's key-batch ceiling into the shipped class —
     # see DwrfLookupUDTF.MAX_KEYS for why env alone can't cross into
@@ -120,9 +117,7 @@ def register_udtfs(spark) -> None:
         "DwrfLookupUDTF",
         (DwrfLookupUDTF,),
         {
-            "MAX_KEYS": int(
-                os.environ.get("SPARK_GRAFT_LOOKUP_MAX_KEYS", 1_000_000)
-            )
+            "MAX_KEYS": env_int("SPARK_GRAFT_LOOKUP_MAX_KEYS", 1_000_000)
         },
     )
     spark.udtf.register("dwrf_lookup", udtf(lookup_cls))

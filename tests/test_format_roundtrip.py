@@ -1515,3 +1515,44 @@ def test_nullable_stride_dict_seek_and_rebuild_parity(tmp_path):
         # point lookups across null/dup/unique rows
         for r in (0, 11, 1_499, 1_500, 4_321, n - 1):
             assert f.read_row(r) == {"sd": vals[r]}, r
+
+
+def test_malformed_pool_env_uses_default_pool_size(tmp_path, monkeypatch):
+    """A malformed SPARK_GRAFT_ENCODE_THREADS / SPARK_GRAFT_COMPRESS_THREADS
+    sizes the encode and compress pools at their defaults, with one
+    RuntimeWarning per variable, instead of raising mid-write."""
+    import os
+    import warnings
+
+    from hive_dwrf_spark.format import codecs, writer
+
+    monkeypatch.setattr(writer, "_ENCODE_POOL", None)
+    monkeypatch.setattr(codecs, "_COMPRESS_POOL", None)
+    monkeypatch.setenv("SPARK_GRAFT_ENCODE_THREADS", "eight")
+    monkeypatch.setenv("SPARK_GRAFT_COMPRESS_THREADS", "1.5")
+    rng = np.random.default_rng(7)
+    n = 200_000
+    table = pa.table(
+        {
+            "a": rng.integers(0, 1 << 62, n),
+            "b": rng.integers(0, 1 << 62, n),
+        }
+    )
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        assert_tables_equal(table, rt(tmp_path, table))
+    # the write itself built both pools
+    encode, compress = writer._ENCODE_POOL, codecs._COMPRESS_POOL
+    assert encode is not None and compress is not None
+    try:
+        assert encode._max_workers == min(8, os.cpu_count() or 4)
+        assert compress._max_workers == min(4, os.cpu_count() or 2)
+        msgs = sorted(
+            str(x.message) for x in w if x.category is RuntimeWarning
+        )
+        assert len(msgs) == 2, msgs
+        assert "SPARK_GRAFT_COMPRESS_THREADS='1.5'" in msgs[0]
+        assert "SPARK_GRAFT_ENCODE_THREADS='eight'" in msgs[1]
+    finally:
+        encode.shutdown()
+        compress.shutdown()

@@ -25,6 +25,18 @@ def test_registry_nonempty():
     assert set(oracle) == set(queries)
 
 
+def test_registry_import_failure_raises(monkeypatch):
+    """A query module that fails to import fails load_registry() instead
+    of silently dropping its whole family from the registry."""
+    import sys
+
+    from hive_dwrf_spark.queries import load_registry
+
+    monkeypatch.setitem(sys.modules, "hive_dwrf_spark.queries.pipeline", None)
+    with pytest.raises(ImportError):
+        load_registry()
+
+
 @pytest.mark.parametrize("name", sorted(_cases()[1]))
 def test_oracle_match(spark, duck, name):
     queries, oracle = _cases()
